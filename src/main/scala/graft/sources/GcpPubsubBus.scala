@@ -23,7 +23,10 @@ import graft.sources.InMemoryBus.{BusMessage, TransientPullError}
   *    `pubsub_pipeline.py:199-202`); a gRPC deadline expiry surfaces as
   *    `com.google.api.gax.rpc.DeadlineExceededException` → throw
   *    [[PubsubDeadlineExceeded]] (the api_core `DeadlineExceeded` the
-  *    reference classifies at `pubsub_pipeline.py:204-211`).
+  *    reference classifies at `pubsub_pipeline.py:204-211`);
+  *    `ResourceExhaustedException` (quota, `RESOURCE_EXHAUSTED`) →
+  *    [[PubsubResourceExhausted]]; `UnavailableException`
+  *    (`UNAVAILABLE`) → [[PubsubUnavailable]].
   *  - [[PubsubSubscriberApi.acknowledge]] →
   *    `SubscriberStub.acknowledgeCallable().call(AcknowledgeRequest(
   *    subscription, ackIds))` (`pubsub_pipeline.py:44-47`).
@@ -48,11 +51,24 @@ final case class PubsubReceived(ackId: String, messageId: String,
                                 data: Array[Byte],
                                 attributes: Map[String, String])
 
-/** Retryable pull deadline expiry — the api_core `DeadlineExceeded` /
-  * gax `DeadlineExceededException` analog. The adapter translates it to
+/** A retryable pull failure — the gax `ApiException`s whose status
+  * code the client retries. The adapter translates each to
   * [[InMemoryBus.TransientPullError]], so the DSv2 source's existing
-  * `respectDeadline`/backoff retry policy applies unchanged. */
-final class PubsubDeadlineExceeded(msg: String) extends RuntimeException(msg)
+  * `respectDeadline`/backoff retry policy applies unchanged. Any other
+  * error propagates as itself. */
+sealed abstract class PubsubRetryableError(msg: String) extends RuntimeException(msg)
+
+/** Pull deadline expiry: api_core `DeadlineExceeded` /
+  * gax `DeadlineExceededException` (`DEADLINE_EXCEEDED`). */
+final class PubsubDeadlineExceeded(msg: String) extends PubsubRetryableError(msg)
+
+/** Quota or throttling: gax `ResourceExhaustedException`
+  * (`RESOURCE_EXHAUSTED`). */
+final class PubsubResourceExhausted(msg: String) extends PubsubRetryableError(msg)
+
+/** Service briefly unreachable: gax `UnavailableException`
+  * (`UNAVAILABLE`). */
+final class PubsubUnavailable(msg: String) extends PubsubRetryableError(msg)
 
 trait PubsubSubscriberApi {
   def pull(subscriptionPath: String, maxMessages: Int): Seq[PubsubReceived]
@@ -153,9 +169,9 @@ final class GcpPubsubBus(project: String,
     val got =
       try subscriber.pull(subPath(name), pullBatch)
       catch {
-        case e: PubsubDeadlineExceeded =>
-          // empty backlog past the gRPC deadline — the retryable class
-          // the source's respectDeadline/backoff policy handles
+        case e: PubsubRetryableError =>
+          // deadline, quota or a brief outage — the retryable class the
+          // source's respectDeadline/backoff policy handles
           throw new TransientPullError(e.getMessage)
       }
     // a redelivered ack-id replaces its stale buffered twin (deadline

@@ -39,6 +39,7 @@ final class BulkPipeline[A, B](
     busSpec: String = "memory") extends Serializable {
 
   def start(availableNow: Boolean = false): StreamingQuery = {
+    LocalCheckpointFileManager.install(spark)
     val dser = deserializer; val ser = serializer; val f = bulk
     val topic = outTopic
     val busLocal = busSpec

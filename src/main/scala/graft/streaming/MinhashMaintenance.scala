@@ -161,6 +161,7 @@ final class MinhashMaintenance(
     * after the batch's state version and the checkpoint are durable. */
   def start(availableNow: Boolean = false): StreamingQuery = {
     state.guardIdentity(checkpointDir)
+    LocalCheckpointFileManager.install(spark)
     val src = spark.readStream
       .format(BusProvider.format)
       .option("subscription", subscription)

@@ -155,6 +155,7 @@ final class Pipeline(
     * precisely the reference's "ack only after successful publish"
     * (`pubsub_pipeline.py:82-84`) ordering, with a WAL under it. */
   def start(availableNow: Boolean = false): StreamingQuery = {
+    LocalCheckpointFileManager.install(spark)
     val out = transform(stream())
     val ackListener = new AckOnCommitListener(spark, subscription, busSpec)
     spark.streams.addListener(ackListener)

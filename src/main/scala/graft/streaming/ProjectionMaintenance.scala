@@ -227,6 +227,7 @@ final class ProjectionMaintenance(
     * checkpoint are both durable. */
   def start(availableNow: Boolean = false): StreamingQuery = {
     state.guardIdentity(checkpointDir)
+    LocalCheckpointFileManager.install(spark)
     val src = spark.readStream
       .format(BusProvider.format)
       .option("subscription", subscription)

@@ -39,6 +39,7 @@ object PyPipeline {
             busSpec: String, checkpointDir: String,
             availableNow: Boolean, idempotent: Boolean): StreamingQuery = {
     val spark = out.sparkSession
+    LocalCheckpointFileManager.install(spark)
     val ackListener = new AckOnCommitListener(spark, subscription, busSpec)
     spark.streams.addListener(ackListener)
     val pipelineId = java.util.UUID.nameUUIDFromBytes(

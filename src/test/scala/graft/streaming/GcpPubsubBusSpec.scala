@@ -36,7 +36,8 @@ class GcpPubsubBusSpec extends AnyFunSuite {
     val topics = mutable.Map.empty[String, mutable.ArrayBuffer[Stored]]
     val subs = mutable.Map.empty[String, String] // subPath -> topicPath
     val modifyCalls = mutable.ArrayBuffer.empty[(Seq[String], Int)]
-    var failNextPullWithDeadline = 0
+    /** Errors the next pulls throw, one per pull. */
+    var failNextPulls = List.empty[RuntimeException]
 
     def createTopic(path: String): Unit =
       topics.getOrElseUpdate(path, mutable.ArrayBuffer.empty)
@@ -55,9 +56,9 @@ class GcpPubsubBusSpec extends AnyFunSuite {
 
     override def pull(subPath: String,
                       maxMessages: Int): Seq[PubsubReceived] = synchronized {
-      if (failNextPullWithDeadline > 0) {
-        failNextPullWithDeadline -= 1
-        throw new PubsubDeadlineExceeded("deadline exceeded on pull")
+      failNextPulls match {
+        case e :: rest => failNextPulls = rest; throw e
+        case Nil =>
       }
       val log = topics(subs(subPath))
       log.iterator.filter(m => !m.acked && m.outstandingAckId == null)
@@ -176,9 +177,31 @@ class GcpPubsubBusSpec extends AnyFunSuite {
     val fake = freshFake("t", "s")
     val bus = new GcpPubsubBus("p", fake, fake)
     bus.publish("t", "m1".getBytes(UTF_8))
-    fake.failNextPullWithDeadline = 1
+    fake.failNextPulls = List(new PubsubDeadlineExceeded("deadline exceeded on pull"))
     intercept[TransientPullError](bus.endOffset("s"))
     assert(bus.endOffset("s") == 1L) // retry drains normally
+  }
+
+  Seq[(String, String => RuntimeException)](
+    "RESOURCE_EXHAUSTED" -> (new PubsubResourceExhausted(_)),
+    "UNAVAILABLE" -> (new PubsubUnavailable(_))).foreach { case (code, error) =>
+    test(s"pull $code surfaces as TransientPullError (the source's retry class)") {
+      val fake = freshFake("t", "s")
+      val bus = new GcpPubsubBus("p", fake, fake)
+      bus.publish("t", "m1".getBytes(UTF_8))
+      fake.failNextPulls = List(error(s"$code on pull"), error(s"$code again"))
+      val e = intercept[TransientPullError](bus.endOffset("s"))
+      assert(e.getMessage.contains(code))
+      intercept[TransientPullError](bus.endOffset("s"))
+      assert(bus.endOffset("s") == 1L) // retry drains normally
+    }
+  }
+
+  test("a non-retryable pull error propagates as itself, not as a transient one") {
+    val fake = freshFake("t", "s")
+    val bus = new GcpPubsubBus("p", fake, fake)
+    fake.failNextPulls = List(new IllegalStateException("PERMISSION_DENIED on pull"))
+    intercept[IllegalStateException](bus.endOffset("s"))
   }
 
   test("publishIdempotent carries the key as an attribute (consumer-side dedup hook)") {

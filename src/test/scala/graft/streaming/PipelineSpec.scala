@@ -161,9 +161,6 @@ class PipelineSpec extends SparkSpec {
       // rewind the bus acks so restart redelivers batch 0
       InMemoryBus.rewindCommitted(inSub, 0)
       java.nio.file.Files.delete(ckpt.resolve("commits").resolve("0"))
-      // the local FS keeps a Hadoop checksum shadow; leaving it behind
-      // makes the commit-log rewrite look like a concurrent writer
-      java.nio.file.Files.deleteIfExists(ckpt.resolve("commits").resolve(".0.crc"))
       // wait for q1's checkpoint lease to be released before restarting
       val deadline = System.currentTimeMillis + 20000
       while (System.currentTimeMillis < deadline &&
@@ -197,7 +194,6 @@ class PipelineSpec extends SparkSpec {
     assert(InMemoryBus.payloads(outSub).size === 20)
     InMemoryBus.rewindCommitted(inSub, 0)
     java.nio.file.Files.delete(ckpt.resolve("commits").resolve("0"))
-    java.nio.file.Files.deleteIfExists(ckpt.resolve("commits").resolve(".0.crc"))
     val deadline = System.currentTimeMillis + 20000
     while (System.currentTimeMillis < deadline &&
       spark.streams.active.exists(_.runId == q1.runId)) Thread.sleep(50)
@@ -323,7 +319,6 @@ class PipelineSpec extends SparkSpec {
     // crash with the epoch commit and the acks both lost → batch replays
     InMemoryBus.rewindCommitted(inSub, 0)
     java.nio.file.Files.delete(ckpt.resolve("commits").resolve("0"))
-    java.nio.file.Files.deleteIfExists(ckpt.resolve("commits").resolve(".0.crc"))
     val deadline = System.currentTimeMillis + 20000
     while (System.currentTimeMillis < deadline &&
       spark.streams.active.exists(_.runId == q1.runId)) Thread.sleep(50)
@@ -606,5 +601,44 @@ class PipelineSpec extends SparkSpec {
       === (1 to 6).map(i => s"""{"data":"m$i","nested":{"nestedData":"x"}}""").sorted,
       "lost-ack recovery duplicated or dropped rows")
     assert(awaitCommitted(inSub, 6) === 6)
+  }
+
+  test("a checkpoint written by Spark's stock file manager resumes under the engine's: every input exactly once") {
+    val key = LocalCheckpointFileManager.ConfKey
+    val stockClass = classOf[org.apache.spark.sql.execution.streaming.checkpointing
+      .FileContextBasedCheckpointFileManager].getName
+    val saved = spark.conf.getOption(key)
+    try {
+      val (inTopic, inSub, outTopic, outSub) = fresh("ckfm")
+      val n = 200
+      val bodies = (0 until n).map(i => s"""{"data":"m$i","nested":{"nestedData":"x"}}""")
+      bodies.foreach(b => InMemoryBus.publish(inTopic, b.getBytes(UTF_8)))
+      val ckpt = Files.createTempDirectory("graft-ckpt")
+      def pipe() = new Pipeline(spark, inSub, outTopic, JsonSerde(payloadSchema),
+        df => df.select(col("payload.*")), ckpt.toString, bulkLimit = 10, idempotent = true)
+
+      // phase 1: the user chose Spark's stock manager; drain part, stop mid-stream
+      spark.conf.set(key, stockClass)
+      val q1 = pipe().start()
+      assert(awaitCommitted(inSub, 20) >= 20)
+      q1.stop()
+      assert(spark.conf.get(key) === stockClass, "a user-set checkpoint file manager was overridden")
+      assert(Files.exists(ckpt.resolve("offsets").resolve(".0.crc")),
+        "phase 1 did not write through the stock manager")
+      assert(InMemoryBus.committedOffset(inSub) < n, "phase 1 drained everything; nothing is left to resume")
+
+      // phase 2: same checkpoint, engine default
+      spark.conf.unset(key)
+      val q2 = pipe().start(availableNow = true)
+      q2.awaitTermination(60000)
+      assert(spark.conf.get(key) === classOf[LocalCheckpointFileManager].getName)
+      assert(awaitCommitted(inSub, n) === n)
+      val last = q2.lastProgress.batchId
+      assert(!Files.exists(ckpt.resolve("offsets").resolve(s".$last.crc")),
+        "phase 2 did not write through the engine's manager")
+
+      val out = InMemoryBus.payloads(outSub).map(new String(_, UTF_8))
+      assert(out.sorted === bodies.sorted, "an input has no output, or more than one")
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }
