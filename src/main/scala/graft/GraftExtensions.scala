@@ -2,48 +2,24 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
 import graft.functions.{DotProductExpr, MinHashSignatureExpr, RabinFingerprintExpr, ShingleHashesExpr, SimHash64Expr}
 
 /** SparkSessionExtensions entry point: registers the engine's custom
-  * Catalyst expressions as SQL functions, so `spark.sql` users get the
-  * same compiled operators as the Column API:
+  * Catalyst expressions ([[GraftExtensions.functions]]) as SQL functions,
+  * so `spark.sql` users get the same compiled operators as the Column API:
   *
   * {{{
   * SparkSession.builder().withExtensions(new GraftExtensions)...
-  * spark.sql("SELECT shingle_hashes(lower(text), 3) FROM docs")
-  * spark.sql("SELECT minhash_signature(shingle_hashes(text, 3), 32) ...")
+  * spark.sql("SELECT <function>(lower(text), ...) FROM docs")
   * }}}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  import GraftExtensions.{boolArg, intArg}
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashesExpr].getName, "shingle_hashes"),
-      (args: Seq[Expression]) =>
-        ShingleHashesExpr(args.head, intArg(args(1), "shingle size k"))))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_signature"),
-      new ExpressionInfo(classOf[MinHashSignatureExpr].getName, "minhash_signature"),
-      (args: Seq[Expression]) =>
-        MinHashSignatureExpr(args.head, intArg(args(1), "signature length n"))))
-    ext.injectFunction((
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProductExpr].getName, "dot_product"),
-      (args: Seq[Expression]) => DotProductExpr(args.head, args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64Expr].getName, "simhash64"),
-      (args: Seq[Expression]) => SimHash64Expr(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("rabin_fingerprint"),
-      new ExpressionInfo(classOf[RabinFingerprintExpr].getName, "rabin_fingerprint"),
-      (args: Seq[Expression]) =>
-        RabinFingerprintExpr(args.head, boolArg(args(1), "wordLevel"))))
+    GraftExtensions.functions.foreach { case (name, cls, builder) =>
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder))
+    }
     // band-join → interval-bucket equi-join rewrite (two-large-sides
     // scale path; see graft.plans.RangeJoinToBucket)
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinToBucket())
@@ -54,7 +30,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 }
 
-/** Same registrations for an already-running session (tests, REPL). */
 object GraftExtensions {
   private[graft] def intArg(e: Expression, what: String): Int = e match {
     case Literal(v: Int, _) => v
@@ -68,20 +43,23 @@ object GraftExtensions {
       s"$what must be a boolean literal, got: $other")
   }
 
+  /** The engine's SQL functions: (name, expression class, builder). Both
+    * the session extension and [[register]] install exactly this list. */
+  private[graft] val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("shingle_hashes", classOf[ShingleHashesExpr],
+      args => ShingleHashesExpr(args.head, intArg(args(1), "shingle size k"))),
+    ("minhash_signature", classOf[MinHashSignatureExpr],
+      args => MinHashSignatureExpr(args.head, intArg(args(1), "signature length n"))),
+    ("dot_product", classOf[DotProductExpr], args => DotProductExpr(args.head, args(1))),
+    ("simhash64", classOf[SimHash64Expr], args => SimHash64Expr(args.head)),
+    ("rabin_fingerprint", classOf[RabinFingerprintExpr],
+      args => RabinFingerprintExpr(args.head, boolArg(args(1), "wordLevel"))))
+
+  /** Same registrations for an already-running session (tests, REPL). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("shingle_hashes",
-      args => ShingleHashesExpr(args.head, intArg(args(1), "shingle size k")),
-      "built-in")
-    reg.createOrReplaceTempFunction("minhash_signature",
-      args => MinHashSignatureExpr(args.head, intArg(args(1), "signature length n")),
-      "built-in")
-    reg.createOrReplaceTempFunction("dot_product",
-      args => DotProductExpr(args.head, args(1)), "built-in")
-    reg.createOrReplaceTempFunction("simhash64",
-      args => SimHash64Expr(args.head), "built-in")
-    reg.createOrReplaceTempFunction("rabin_fingerprint",
-      args => RabinFingerprintExpr(args.head, boolArg(args(1), "wordLevel")),
-      "built-in")
+    functions.foreach { case (name, _, builder) =>
+      reg.createOrReplaceTempFunction(name, builder, "built-in")
+    }
   }
 }

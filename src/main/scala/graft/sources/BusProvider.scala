@@ -62,6 +62,11 @@ object BusProvider {
 
   /** Fully-qualified format name for readStream.format(...). */
   val format: String = classOf[BusProvider].getName
+
+  /** How a bus source names itself: its `toString`, which Spark reports as
+    * the `SourceProgress.description` of every progress event. A query
+    * may read several streams; this is how an ack picks out its own. */
+  def describe(subscription: String): String = s"BusMicroBatchStream[$subscription]"
 }
 
 private class BusTable(props: Map[String, String]) extends Table with SupportsRead {
@@ -269,6 +274,8 @@ private class BusMicroBatchStream(subscription: String, busSpec: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory = new BusReaderFactory
+
+  override def toString: String = BusProvider.describe(subscription)
 
   /** Engine calls this after the sink epoch is durable → ack the prefix.
     * This IS the Acknowledger (`pubsub_pipeline.py:31-52`) with a WAL.

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 
-import graft.sources.{BusRegistry, InMemoryBus}
+import graft.sources.{BusProvider, BusRegistry, InMemoryBus}
 
 /** Ack bookkeeping shared by the pipeline runners: on each completed
   * micro-batch (QueryProgress fires after the batch's offset/commit logs
@@ -13,8 +13,7 @@ import graft.sources.{BusRegistry, InMemoryBus}
   * it. Events arriving before the query's runId is known are buffered and
   * replayed by `bind()`, so no batch commit can be missed. */
 private[streaming] final class AckOnCommitListener(
-    session: SparkSession, sub: String,
-    busSpec: String = "memory") extends StreamingQueryListener {
+    session: SparkSession, sub: String, busSpec: String) extends StreamingQueryListener {
   // driver-side: one resolved transport for the listener's lifetime
   private val bus = BusRegistry.resolve(busSpec)
   import StreamingQueryListener._
@@ -37,8 +36,13 @@ private[streaming] final class AckOnCommitListener(
   override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
     if (e.runId == runId) session.streams.removeListener(this)
 
+  // Spark lists a query's sources in plan order, so the first one need
+  // not be this subscription (a transform may union another stream in
+  // front): ack only the source that names `sub`
+  private val description = BusProvider.describe(sub)
+
   private def ack(p: StreamingQueryProgress): Unit =
-    p.sources.headOption.foreach { s =>
+    p.sources.find(_.description == description).foreach { s =>
       Option(s.endOffset).map(_.trim).filter(_.nonEmpty)
         .foreach { o =>
           // a lost ack RPC is non-fatal by design: acks are cumulative,

@@ -1,10 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-
-import graft.sources.{BusProvider, BusRegistry}
+import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Typed bulk pipeline — the engine's `BulkPubSubPipeline`
   * (`pubsub_pipeline.py:214-242`): the processor sees the whole pulled
@@ -39,48 +36,23 @@ final class BulkPipeline[A, B](
     busSpec: String = "memory") extends Serializable {
 
   def start(availableNow: Boolean = false): StreamingQuery = {
-    LocalCheckpointFileManager.install(spark)
     val dser = deserializer; val ser = serializer; val f = bulk
-    val topic = outTopic
-    val busLocal = busSpec
-    val ackListener = new AckOnCommitListener(spark, subscription, busSpec)
-    spark.streams.addListener(ackListener)
-    val src = spark.readStream
-      .format(BusProvider.format)
-      .option("subscription", subscription)
-      .option("bus", busSpec)
-      .option("bulkLimit", bulkLimit)
+    val src = Pipeline.source(spark, subscription, busSpec, bulkLimit)
       .option("readPartitions", readPartitions)
       .load()
       .select("value")
-    val q = try src.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(0))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        import org.apache.spark.sql.Encoders
-        val out = batch
-          .select(col("value"))
-          .as(Encoders.BINARY)
-          .mapPartitions { it =>
-            val in = it.map(dser).toSeq
-            val res = f(in)
-            // §2-D fix: enforce, don't silently zip-drop
-            require(res.size == in.size,
-              s"bulk transform must be length-preserving: got ${res.size} for ${in.size} inputs")
-            res.iterator.map(ser)
-          }(Encoders.BINARY)
-        out.foreachPartition { rows: Iterator[Array[Byte]] =>
-          val bus = BusRegistry.resolve(busLocal)
-          rows.grouped(Pipeline.PublishChunkRows).foreach(chunk =>
-            bus.publishBatch(topic, chunk.toSeq))
-        }
-      }
-      .start()
-    catch {
-      // unbound listener would buffer other queries' events forever
-      case e: Throwable => spark.streams.removeListener(ackListener); throw e
+    Pipeline.start(src, subscription, busSpec, checkpointDir, availableNow) { (batch, batchId) =>
+      val out = batch
+        .as(Encoders.BINARY)
+        .mapPartitions { it =>
+          val in = it.map(dser).toSeq
+          val res = f(in)
+          // §2-D fix: enforce, don't silently zip-drop
+          require(res.size == in.size,
+            s"bulk transform must be length-preserving: got ${res.size} for ${in.size} inputs")
+          res.iterator.map(ser)
+        }(Encoders.BINARY)
+      Pipeline.publish(out.toDF(), batchId, outTopic, busSpec, keyPrefix = None)
     }
-    ackListener.bind(q.runId)
-    q
   }
 }

@@ -2,11 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 import graft.operators.DedupOps
-import graft.sources.BusProvider
 
 /** Incremental maintenance of the minhash near-dup pair projection
   * under document appends (VERDICT r16 #1 — the [[ProjectionMaintenance]]
@@ -161,31 +160,11 @@ final class MinhashMaintenance(
     * after the batch's state version and the checkpoint are durable. */
   def start(availableNow: Boolean = false): StreamingQuery = {
     state.guardIdentity(checkpointDir)
-    LocalCheckpointFileManager.install(spark)
-    val src = spark.readStream
-      .format(BusProvider.format)
-      .option("subscription", subscription)
-      .option("bus", busSpec)
-      .option("bulkLimit", bulkLimit)
-      .load()
+    val src = Pipeline.source(spark, subscription, busSpec, bulkLimit).load()
       .withColumn("payload", serde.deserialize(col("value")))
       .select(col("payload.doc_id").as("doc_id"),
         col("payload.text").as("text"))
-    val ackListener = new AckOnCommitListener(spark, subscription, busSpec)
-    spark.streams.addListener(ackListener)
-    val q = try {
-      src.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .trigger(if (availableNow) Trigger.AvailableNow()
-                 else Trigger.ProcessingTime(0))
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          applyBatch(batch, batchId)
-        }
-        .start()
-    } catch {
-      case e: Throwable => spark.streams.removeListener(ackListener); throw e
-    }
-    ackListener.bind(q.runId)
+    val q = Pipeline.start(src, subscription, busSpec, checkpointDir, availableNow)(applyBatch)
     state.persistIdentity(q.id.toString)
     q
   }

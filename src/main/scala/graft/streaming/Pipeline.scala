@@ -1,8 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.nio.charset.StandardCharsets
+
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamReader, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.DataType
 
 import graft.sources.{BusProvider, BusRegistry}
@@ -79,7 +82,7 @@ final class Pipeline(
       * after crash-before-checkpoint re-publishes the same keys and the
       * bus absorbs them — effective exactly-once, vs the reference's
       * duplicates (§2-D). Keys are (pipeline identity, batchId, content
-      * hash position) — see `start()` — so they are stable under
+      * hash position) — see [[Pipeline.publish]] — so they are stable under
       * shuffling transforms AND scoped per pipeline (two pipelines
       * sharing an output topic, or a restart with a fresh checkpoint dir,
       * never collide on keys). Requires only that the transform is
@@ -118,22 +121,10 @@ final class Pipeline(
       * at-least-once replay contract unchanged). */
     startAtCommitted: Boolean = false) {
 
-  /** Stable pipeline identity for idempotence-key namespacing: derived
-    * from the checkpoint location, which is exactly the unit that defines
-    * "the same logical pipeline" across restarts. */
-  private val pipelineId: String =
-    java.util.UUID.nameUUIDFromBytes(
-      checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .toString.take(8)
-
   /** The streaming DataFrame: payload column is `payload`, plus the bus
     * metadata columns (ackId/messageId/publishTime/attributes). */
   def stream(): DataFrame =
-    spark.readStream
-      .format(BusProvider.format)
-      .option("subscription", subscription)
-      .option("bus", busSpec)
-      .option("bulkLimit", bulkLimit)
+    Pipeline.source(spark, subscription, busSpec, bulkLimit)
       .option("readPartitions", readPartitions)
       .option("retryBackoffMs", retryBackoffMs)
       .option("respectDeadline", respectDeadline)
@@ -146,82 +137,15 @@ final class Pipeline(
 
   /** Start the pipeline. `availableNow = true` gives a bounded drain-and-
     * stop run (the fixed version of `max_processed_messages`, §2-D).
-    *
-    * Acking: the engine only invokes `MicroBatchStream.commit()` lazily
-    * (when planning a later batch), so a bounded run would finish with the
-    * last batch published-but-unacked. The listener below acks on every
-    * `QueryProgress` event — emitted after the batch's offset/commit logs
-    * are durable and `foreachBatch` (the publish) returned, which is
-    * precisely the reference's "ack only after successful publish"
-    * (`pubsub_pipeline.py:82-84`) ordering, with a WAL under it. */
+    * Acking is [[Pipeline.start]]'s; each batch goes out through the
+    * executor-side [[Pipeline.publish]]. */
   def start(availableNow: Boolean = false): StreamingQuery = {
-    LocalCheckpointFileManager.install(spark)
     val out = transform(stream())
-    val ackListener = new AckOnCommitListener(spark, subscription, busSpec)
-    spark.streams.addListener(ackListener)
-    // if start() itself throws, unregister the listener — an unbound
-    // listener would buffer every future query's progress events forever
-    val q = try {
-      out
-        .select(serde.serialize(struct(out.columns.map(col).toIndexedSeq: _*)).as("data"))
-        .writeStream
-        .option("checkpointLocation", checkpointDir)
-        .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(0))
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val topic = outTopic
-          val pipe = pipelineId
-          val busLocal = busSpec // capture the STRING, resolve per executor
-          // Executor-side publish: no collect-to-driver. On the in-memory
-          // bus this is same-JVM; against a real service each partition
-          // holds one publisher client.
-          if (idempotent) {
-            // Replay-stable keys: a row's key must not depend on which
-            // physical partition/index it lands in, because shuffle block
-            // fetch order varies across replays and an index-based key
-            // would bind to a DIFFERENT row on replay (silent drop = data
-            // loss). Fix: repartition + sort by CONTENT, so (pid, idx) is
-            // a pure function of the batch's row multiset — equal-content
-            // rows are interchangeable, everything else has a stable slot.
-            // The partition count is PINNED (not spark.sql.shuffle
-            // .partitions): a replay after restart under a different
-            // shuffle-partition setting must rebind every (pid, i) to the
-            // same row, or the whole batch re-publishes under new keys
-            // (advisor finding). Costs one extra shuffle per batch.
-            batch
-              .withColumn("__h", xxhash64(col("data")))
-              .repartition(Pipeline.IdempotentKeyPartitions, col("__h"))
-              .sortWithinPartitions(col("__h"), col("data"))
-              .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-                val pid = org.apache.spark.TaskContext.getPartitionId()
-                var i = 0L
-                val bus = BusRegistry.resolve(busLocal)
-                // chunked batch publish: one wire round trip per chunk
-                // on the socket transport instead of one per ROW (keys
-                // stay (pid, running index) — chunking preserves the
-                // sorted iteration order the key contract needs)
-                rows.grouped(Pipeline.PublishChunkRows).foreach { chunk =>
-                  val keyed = chunk.map { r =>
-                    val k = s"$pipe-$batchId-$pid-$i"
-                    i += 1
-                    (k, r.getAs[Array[Byte]](0))
-                  }
-                  bus.publishIdempotentBatch(topic, keyed)
-                }
-              }
-          } else {
-            batch.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-              val bus = BusRegistry.resolve(busLocal)
-              rows.grouped(Pipeline.PublishChunkRows).foreach(chunk =>
-                bus.publishBatch(topic, chunk.map(_.getAs[Array[Byte]](0))))
-            }
-          }
-        }
-        .start()
-    } catch {
-      case e: Throwable => spark.streams.removeListener(ackListener); throw e
+    val data = out.select(serde.serialize(struct(out.columns.map(col).toIndexedSeq: _*)).as("data"))
+    val keyPrefix = if (idempotent) Some(Pipeline.pipelineId(checkpointDir)) else None
+    Pipeline.start(data, subscription, busSpec, checkpointDir, availableNow) { (batch, batchId) =>
+      Pipeline.publish(batch, batchId, outTopic, busSpec, keyPrefix)
     }
-    ackListener.bind(q.runId)
-    q
   }
 
   /** Graceful shutdown between micro-batches — the engine's
@@ -244,4 +168,100 @@ object Pipeline {
     * memory while amortizing the socket transport's per-call connection
     * (Bus.publishBatch) across hundreds of rows. */
   val PublishChunkRows = 512
+
+  /** Stable pipeline identity for idempotence-key namespacing: derived
+    * from the checkpoint location, which is exactly the unit that defines
+    * "the same logical pipeline" across restarts. */
+  private[streaming] def pipelineId(checkpointDir: String): String =
+    java.util.UUID.nameUUIDFromBytes(checkpointDir.getBytes(StandardCharsets.UTF_8))
+      .toString.take(8)
+
+  /** The bus stream every runner reads: `subscription` on `busSpec`,
+    * at most `bulkLimit` messages per micro-batch. */
+  private[streaming] def source(spark: SparkSession, subscription: String, busSpec: String,
+                                bulkLimit: Int): DataStreamReader =
+    spark.readStream.format(BusProvider.format)
+      .option("subscription", subscription)
+      .option("bus", busSpec)
+      .option("bulkLimit", bulkLimit)
+
+  /** The one start path of every bus runner: install the engine's
+    * checkpoint manager, run `batchFn` per micro-batch of `frame`, and
+    * ack `subscription` after each durable batch.
+    *
+    * Acking: the engine only invokes `MicroBatchStream.commit()` lazily
+    * (when planning a later batch), so a bounded run would finish with the
+    * last batch published-but-unacked. The listener acks on every
+    * `QueryProgress` event — emitted after the batch's offset/commit logs
+    * are durable and `batchFn` (the publish) returned, which is
+    * precisely the reference's "ack only after successful publish"
+    * (`pubsub_pipeline.py:82-84`) ordering, with a WAL under it. */
+  private[streaming] def start(frame: DataFrame, subscription: String, busSpec: String,
+                               checkpointDir: String, availableNow: Boolean)(
+      batchFn: (DataFrame, Long) => Unit): StreamingQuery = {
+    val spark = frame.sparkSession
+    LocalCheckpointFileManager.install(spark)
+    val ackListener = new AckOnCommitListener(spark, subscription, busSpec)
+    spark.streams.addListener(ackListener)
+    // if start() itself throws, unregister the listener — an unbound
+    // listener would buffer every future query's progress events forever
+    val q = try {
+      frame.writeStream
+        .option("checkpointLocation", checkpointDir)
+        .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(0))
+        .foreachBatch(batchFn)
+        .start()
+    } catch {
+      case e: Throwable => spark.streams.removeListener(ackListener); throw e
+    }
+    ackListener.bind(q.runId)
+    q
+  }
+
+  /** Publish one micro-batch — a frame of one binary column — to `topic`
+    * from the executors: no collect-to-driver, one publisher per
+    * partition, one bus call per [[PublishChunkRows]] rows. The closures
+    * capture only strings; each executor resolves its own transport.
+    *
+    * With a `keyPrefix`, rows go out under replay-stable idempotence keys
+    * `"$prefix-$batchId-$pid-$i"`. A row's key must not depend on which
+    * physical partition/index it lands in, because shuffle block fetch
+    * order varies across replays and an index-based key would bind to a
+    * DIFFERENT row on replay (silent drop = data loss). So the batch is
+    * repartitioned + sorted by CONTENT: (pid, i) is a pure function of
+    * the batch's row multiset — equal-content rows are interchangeable,
+    * everything else has a stable slot. The partition count is pinned
+    * ([[IdempotentKeyPartitions]]): a replay after restart under a
+    * different shuffle-partition setting must rebind every (pid, i) to
+    * the same row. Chunking keeps the sorted iteration order the keys
+    * need. Costs one extra shuffle per batch. */
+  private[streaming] def publish(data: DataFrame, batchId: Long, topic: String,
+                                 busSpec: String, keyPrefix: Option[String]): Unit =
+    keyPrefix match {
+      case Some(prefix) =>
+        val payload = col(data.columns.head)
+        data
+          .withColumn("__h", xxhash64(payload))
+          .repartition(IdempotentKeyPartitions, col("__h"))
+          .sortWithinPartitions(col("__h"), payload)
+          .foreachPartition { rows: Iterator[Row] =>
+            val pid = TaskContext.getPartitionId()
+            var i = 0L
+            val bus = BusRegistry.resolve(busSpec)
+            rows.grouped(PublishChunkRows).foreach { chunk =>
+              val keyed = chunk.map { r =>
+                val k = s"$prefix-$batchId-$pid-$i"
+                i += 1
+                (k, r.getAs[Array[Byte]](0))
+              }
+              bus.publishIdempotentBatch(topic, keyed)
+            }
+          }
+      case None =>
+        data.foreachPartition { rows: Iterator[Row] =>
+          val bus = BusRegistry.resolve(busSpec)
+          rows.grouped(PublishChunkRows).foreach(chunk =>
+            bus.publishBatch(topic, chunk.map(_.getAs[Array[Byte]](0))))
+        }
+    }
 }

@@ -2,11 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, LongType, StructType}
 
 import graft.operators.GraphOps
-import graft.sources.BusProvider
 
 /** Incremental maintenance of the co-purchase pair-support projection
   * under bus appends — the lakehouse "maintain the materialized view"
@@ -227,31 +226,11 @@ final class ProjectionMaintenance(
     * checkpoint are both durable. */
   def start(availableNow: Boolean = false): StreamingQuery = {
     state.guardIdentity(checkpointDir)
-    LocalCheckpointFileManager.install(spark)
-    val src = spark.readStream
-      .format(BusProvider.format)
-      .option("subscription", subscription)
-      .option("bus", busSpec)
-      .option("bulkLimit", bulkLimit)
-      .load()
+    val src = Pipeline.source(spark, subscription, busSpec, bulkLimit).load()
       .withColumn("payload", serde.deserialize(col("value")))
       .select(col("payload.l_orderkey").as("l_orderkey"),
         col("payload.parts").as("parts"))
-    val ackListener = new AckOnCommitListener(spark, subscription, busSpec)
-    spark.streams.addListener(ackListener)
-    val q = try {
-      src.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .trigger(if (availableNow) Trigger.AvailableNow()
-                 else Trigger.ProcessingTime(0))
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          applyBatch(batch, batchId)
-        }
-        .start()
-    } catch {
-      case e: Throwable => spark.streams.removeListener(ackListener); throw e
-    }
-    ackListener.bind(q.runId)
+    val q = Pipeline.start(src, subscription, busSpec, checkpointDir, availableNow)(applyBatch)
     // q.id IS the checkpoint's persistent query id (Spark writes it to
     // checkpointDir/metadata at first start and reuses it after)
     state.persistIdentity(q.id.toString)

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The PySpark-facing half of the runner (r13 "What's missing #2" — the
   * reference's `processor` slot is a PYTHON callable,
@@ -19,12 +19,13 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * format NAME crosses py4j as a string; the user's Python closure
   * never has to cross into the JVM), then hands the underlying Java
   * DataFrame to [[start]], which serializes every column to one JSON
-  * `data` payload, publishes per partition in the JVM (no
+  * `data` payload and hands it to the runners' shared start path:
+  * [[Pipeline.publish]] publishes per partition in the JVM (no
   * collect-to-driver, no py4j round trip per row — the gateway is
   * driver-only, so a Python-side publish loop could never be
-  * distributed), and acks the subscription on each durable batch via
-  * [[AckOnCommitListener]] — the reference's Acknowledger ordering with
-  * a WAL under it. `python/graft_pubsub.py` is the shim that assembles
+  * distributed), and [[Pipeline.start]] acks the subscription on each
+  * durable batch — the reference's Acknowledger ordering with a WAL
+  * under it. `python/graft_pubsub.py` is the shim that assembles
   * the whole reference constructor surface on top of this. */
 object PyPipeline {
 
@@ -38,56 +39,11 @@ object PyPipeline {
   def start(out: DataFrame, subscription: String, outTopic: String,
             busSpec: String, checkpointDir: String,
             availableNow: Boolean, idempotent: Boolean): StreamingQuery = {
-    val spark = out.sparkSession
-    LocalCheckpointFileManager.install(spark)
-    val ackListener = new AckOnCommitListener(spark, subscription, busSpec)
-    spark.streams.addListener(ackListener)
-    val pipelineId = java.util.UUID.nameUUIDFromBytes(
-      checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .toString.take(8)
-    val q = try {
-      out
-        .select(to_json(struct(out.columns.map(col).toIndexedSeq: _*))
-          .cast("binary").as("data"))
-        .writeStream
-        .option("checkpointLocation", checkpointDir)
-        .trigger(if (availableNow) Trigger.AvailableNow()
-          else Trigger.ProcessingTime(0))
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val topic = outTopic
-          val busLocal = busSpec
-          if (idempotent) {
-            val pipe = pipelineId
-            batch
-              .withColumn("__h", xxhash64(col("data")))
-              .repartition(Pipeline.IdempotentKeyPartitions, col("__h"))
-              .sortWithinPartitions(col("__h"), col("data"))
-              .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-                val pid = org.apache.spark.TaskContext.getPartitionId()
-                var i = 0L
-                val bus = graft.sources.BusRegistry.resolve(busLocal)
-                rows.grouped(Pipeline.PublishChunkRows).foreach { chunk =>
-                  val keyed = chunk.map { r =>
-                    val k = s"$pipe-$batchId-$pid-$i"
-                    i += 1
-                    (k, r.getAs[Array[Byte]](0))
-                  }
-                  bus.publishIdempotentBatch(topic, keyed)
-                }
-              }
-          } else {
-            batch.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-              val bus = graft.sources.BusRegistry.resolve(busLocal)
-              rows.grouped(Pipeline.PublishChunkRows).foreach(chunk =>
-                bus.publishBatch(topic, chunk.map(_.getAs[Array[Byte]](0))))
-            }
-          }
-        }
-        .start()
-    } catch {
-      case e: Throwable => spark.streams.removeListener(ackListener); throw e
+    val data = out.select(to_json(struct(out.columns.map(col).toIndexedSeq: _*))
+      .cast("binary").as("data"))
+    val keyPrefix = if (idempotent) Some(Pipeline.pipelineId(checkpointDir)) else None
+    Pipeline.start(data, subscription, busSpec, checkpointDir, availableNow) { (batch, batchId) =>
+      Pipeline.publish(batch, batchId, outTopic, busSpec, keyPrefix)
     }
-    ackListener.bind(q.runId)
-    q
   }
 }

@@ -84,6 +84,19 @@ class ContractSpec extends SparkSpec {
           ShingleExpressions.shingleHashes(lower(col("text")), 3), 8).as("sig"))
       .orderBy("doc_id").collect()
     assert(viaSql.map(_.toString).toSeq === viaCol.map(_.toString).toSeq)
+    // every function of the one registration table resolves in spark.sql
+    val calls = Map(
+      "shingle_hashes" -> "shingle_hashes('a b c d', 3)",
+      "minhash_signature" -> "minhash_signature(shingle_hashes('a b c d', 3), 8)",
+      "dot_product" -> "dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D))",
+      "simhash64" -> "simhash64('a b c')",
+      "rabin_fingerprint" -> "rabin_fingerprint('a b c', true)")
+    assert(GraftExtensions.functions.map(_._1).toSet === calls.keySet)
+    calls.foreach { case (name, call) =>
+      assert(!spark.sql(s"SELECT $call").head().isNullAt(0), s"$name did not resolve")
+    }
+    assert(spark.sql("SELECT dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D))")
+      .head().getDouble(0) === 11.0)
   }
 
   test("no duplicate slug keys in the SparkEntry source (Map literals keep the LAST)") {

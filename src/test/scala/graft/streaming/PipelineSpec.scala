@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.SparkSpec
-import graft.sources.InMemoryBus
+import graft.sources.{BusProvider, InMemoryBus}
 
 /** The three behavioral contracts ported from the reference's test suite
   * (SURVEY §5.2-1; `test_pubsub_pipeline.py:56-143`), plus admission
@@ -640,5 +640,81 @@ class PipelineSpec extends SparkSpec {
       val out = InMemoryBus.payloads(outSub).map(new String(_, UTF_8))
       assert(out.sorted === bodies.sorted, "an input has no output, or more than one")
     } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("the ack listener acks its own subscription when the transform unions another stream in front") {
+    // Spark lists a query's sources in plan order: here sub B's source is
+    // first. Acking the first source's end offset would move sub A to 50,
+    // past messages A never had.
+    val (inA, subA, outTopic, outSub) = fresh("ackA")
+    val (inB, subB, _, _) = fresh("ackB")
+    (1 to 5).foreach(i => InMemoryBus.publish(inA,
+      s"""{"data":"a$i","nested":{"nestedData":"x"}}""".getBytes(UTF_8)))
+    (1 to 50).foreach(i => InMemoryBus.publish(inB,
+      s"""{"data":"b$i","nested":{"nestedData":"x"}}""".getBytes(UTF_8)))
+    val serde = JsonSerde(payloadSchema)
+    val other = spark.readStream.format(BusProvider.format)
+      .option("subscription", subB).load()
+      .withColumn("payload", serde.deserialize(col("value")))
+    val q = new Pipeline(spark, subA, outTopic, serde,
+      df => other.union(df).select(col("payload.*")),
+      Files.createTempDirectory("graft-ckpt").toString).start(availableNow = true)
+    q.awaitTermination(60000)
+    assert(InMemoryBus.payloads(outSub).size === 55)
+    assert(awaitCommitted(subA, 5) === 5)
+    // every progress event of the run has reached the listener
+    org.apache.spark.sql.graftbridge.ColumnBridge.drainListenerBus(spark.sparkContext)
+    assert(InMemoryBus.committedOffset(subA) === 5, "sub A was acked with another source's offset")
+  }
+
+  /** The PySpark shim's frame: its own bus stream, transformed. */
+  private def pyFrame(inSub: String): DataFrame =
+    spark.readStream.format(BusProvider.format)
+      .option("subscription", inSub).load()
+      .withColumn("payload", JsonSerde(payloadSchema).deserialize(col("value")))
+      .select(upper(col("payload.data")).as("data"))
+
+  private def awaitReleased(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+    val deadline = System.currentTimeMillis + 20000
+    while (System.currentTimeMillis < deadline &&
+      spark.streams.active.exists(_.runId == q.runId)) Thread.sleep(50)
+    Thread.sleep(250)
+  }
+
+  test("PyPipeline publishes every input of a transformed bus stream once and acks to N") {
+    val (inTopic, inSub, outTopic, outSub) = fresh("py")
+    val n = 45
+    (1 to n).foreach(i => InMemoryBus.publish(inTopic,
+      s"""{"data":"m$i","nested":{"nestedData":"x"}}""".getBytes(UTF_8)))
+    val q = PyPipeline.start(pyFrame(inSub), inSub, outTopic, "memory",
+      Files.createTempDirectory("graft-ckpt").toString, availableNow = true, idempotent = false)
+    q.awaitTermination(60000)
+    assert(InMemoryBus.payloads(outSub).map(new String(_, UTF_8)).sorted
+      === (1 to n).map(i => s"""{"data":"M$i"}""").sorted)
+    assert(awaitCommitted(inSub, n) === n)
+  }
+
+  test("PyPipeline replay after crash-before-commit: duplicates by default, absorbed with idempotent keys") {
+    def replayScenario(idempotent: Boolean): Seq[String] = {
+      val (inTopic, inSub, outTopic, outSub) = fresh(s"py-replay-$idempotent")
+      (1 to 12).foreach(i => InMemoryBus.publish(inTopic,
+        s"""{"data":"m$i","nested":{"nestedData":"x"}}""".getBytes(UTF_8)))
+      val ckpt = Files.createTempDirectory("graft-ckpt")
+      def run() = PyPipeline.start(pyFrame(inSub), inSub, outTopic, "memory",
+        ckpt.toString, availableNow = true, idempotent)
+      val q1 = run()
+      q1.awaitTermination(60000)
+      assert(InMemoryBus.payloads(outSub).size === 12)
+      // published, then crashed with the epoch commit and the acks lost
+      InMemoryBus.rewindCommitted(inSub, 0)
+      Files.delete(ckpt.resolve("commits").resolve("0"))
+      awaitReleased(q1)
+      run().awaitTermination(60000)
+      assert(awaitCommitted(inSub, 12) === 12)
+      InMemoryBus.payloads(outSub).map(new String(_, UTF_8)).sorted
+    }
+    val once = (1 to 12).map(i => s"""{"data":"M$i"}""").sorted
+    assert(replayScenario(idempotent = false) === (once ++ once).sorted)
+    assert(replayScenario(idempotent = true) === once)
   }
 }
